@@ -930,68 +930,43 @@ object Engine {
     * the binding backbone of [[PreparedStatement]] (see its bind() note on
     * why positional Array binding can't be used). */
   private[graft] def nameParams(stmt: String): (String, Seq[String]) = {
-    val out = new StringBuilder
-    val names = Seq.newBuilder[String]
-    var n = 0
-    var quote: Char = 0
-    var i = 0
-    def at(j: Int, c: Char): Boolean = j < stmt.length && stmt.charAt(j) == c
-    while (i < stmt.length) {
-      val c = stmt.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < stmt.length) {
-          out.append(stmt.charAt(i + 1)); i += 1
-        }
-      } else if (c == '\'' || c == '"' || c == '`') { quote = c; out.append(c) }
-      else if ((c == '-' && at(i + 1, '-')) || c == '#') {
-        while (i < stmt.length && stmt.charAt(i) != '\n') {
-          out.append(stmt.charAt(i)); i += 1
-        }
-        i -= 1
-      } else if (c == '/' && at(i + 1, '*')) {
-        out.append("/*"); i += 2
-        while (i < stmt.length && !(stmt.charAt(i) == '*' && at(i + 1, '/'))) {
-          out.append(stmt.charAt(i)); i += 1
-        }
-        if (i < stmt.length) { out.append("*/"); i += 1 }
-      } else if (c == '?') {
-        val name = s"_gp_$n"
-        out.append(':').append(name)
-        names += name
-        n += 1
-      } else out.append(c)
-      i += 1
-    }
-    (out.toString, names.result())
+    val (named, n) = replaceMarkers(stmt)(k => s":_gp_$k")
+    (named, (0 until n).map(k => s"_gp_$k"))
   }
 
   /** Count `?` parameter markers outside quotes/comments — the prepare
     * response's num_params field (same token-safe scan as
-    * [[bindPositional]]). */
+    * [[bindPositional]], without building text: it runs on every
+    * prepare). */
   private[graft] def countParams(stmt: String): Int = {
     var n = 0
-    var quote: Char = 0
     var i = 0
-    def at(j: Int, c: Char): Boolean = j < stmt.length && stmt.charAt(j) == c
     while (i < stmt.length) {
-      val c = stmt.charAt(i)
-      if (quote != 0) {
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < stmt.length) i += 1
-      } else if (c == '\'' || c == '"' || c == '`') quote = c
-      else if ((c == '-' && at(i + 1, '-')) || c == '#') {
-        while (i < stmt.length && stmt.charAt(i) != '\n') i += 1
-        i -= 1
-      } else if (c == '/' && at(i + 1, '*')) {
-        i += 2
-        while (i < stmt.length && !(stmt.charAt(i) == '*' && at(i + 1, '/'))) i += 1
-        i += 1
-      } else if (c == '?') n += 1
-      i += 1
+      val e = MySqlLexer.spanEnd(stmt, i)
+      if (e > i) i = e
+      else { if (stmt.charAt(i) == '?') n += 1; i += 1 }
     }
     n
+  }
+
+  /** `stmt` with its k-th `?` marker (k from 0) in code — never in a
+    * literal or comment ([[MySqlLexer]]) — replaced by `marker(k)`, plus
+    * the number of markers. */
+  private def replaceMarkers(stmt: String)(marker: Int => String)
+      : (String, Int) = {
+    val out = new StringBuilder
+    var n = 0
+    var i = 0
+    while (i < stmt.length) {
+      val e = MySqlLexer.spanEnd(stmt, i)
+      if (e > i) { out.append(stmt.substring(i, e)); i = e }
+      else {
+        val c = stmt.charAt(i)
+        if (c == '?') { out.append(marker(n)); n += 1 } else out.append(c)
+        i += 1
+      }
+    }
+    (out.toString, n)
   }
 
   /** Multi-statement batch execution — the engine analog of the
@@ -1015,37 +990,19 @@ object Engine {
   private[graft] def splitStatements(batch: String): Seq[String] = {
     val stmts = Seq.newBuilder[String]
     val cur = new StringBuilder
-    var quote: Char = 0
     var i = 0
-    def at(j: Int, c: Char): Boolean = j < batch.length && batch.charAt(j) == c
     while (i < batch.length) {
+      val e = MySqlLexer.spanEnd(batch, i)
       val c = batch.charAt(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < batch.length) {
-          cur.append(batch.charAt(i + 1)); i += 1
-        }
-      } else if (c == '\'' || c == '"' || c == '`') { quote = c; cur.append(c) }
-      else if (c == '-' && at(i + 1, '-')) {
-        // line comment: copy through end-of-line (exclusive), never split
-        while (i < batch.length && batch.charAt(i) != '\n') { cur.append(batch.charAt(i)); i += 1 }
-        i -= 1
-      } else if (c == '#') {
-        // MySQL-only line comment: strip to end-of-line
-        while (i < batch.length && batch.charAt(i) != '\n') i += 1
-        i -= 1
-      } else if (c == '/' && at(i + 1, '*')) {
-        // block comment (incl. /*+ hints */): copy through the closing */
-        cur.append("/*"); i += 2
-        while (i < batch.length && !(batch.charAt(i) == '*' && at(i + 1, '/'))) {
-          cur.append(batch.charAt(i)); i += 1
-        }
-        if (i < batch.length) { cur.append("*/"); i += 1 }
+      if (e > i) {
+        // literals and comments never split; MySQL-only `#` comments strip
+        if (c != '#') cur.append(batch.substring(i, e))
+        i = e
+      } else {
+        if (c == ';') { stmts += cur.toString; cur.clear() }
+        else cur.append(c)
+        i += 1
       }
-      else if (c == ';') { stmts += cur.toString; cur.clear() }
-      else cur.append(c)
-      i += 1
     }
     stmts += cur.toString
     stmts.result().map(_.trim).filter(_.nonEmpty)
@@ -1728,24 +1685,28 @@ object Engine {
       case _ => None
     }
 
-  /** Split on `sep` outside quotes/backticks (SET lists with quoted values). */
-  private def splitTopLevel(s: String, sep: Char): Seq[String] = {
+  /** Split on `sep` in code, never inside a literal or comment (SET lists
+    * with quoted values); with `nested`, only outside parens (a CREATE
+    * TABLE column list, whose type args and ENUM lists nest). */
+  private def splitTopLevel(s: String, sep: Char,
+      nested: Boolean = false): Seq[String] = {
     val parts = Seq.newBuilder[String]
     val cur = new StringBuilder
-    var quote: Char = 0
+    var depth = 0
     var i = 0
     while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < s.length) {
-          cur.append(s.charAt(i + 1)); i += 1
+      val e = MySqlLexer.spanEnd(s, i)
+      if (e > i) { cur.append(s.substring(i, e)); i = e }
+      else {
+        val c = s.charAt(i)
+        if (c == sep && depth == 0) { parts += cur.toString; cur.clear() }
+        else {
+          if (nested && c == '(') depth += 1
+          else if (nested && c == ')') depth -= 1
+          cur.append(c)
         }
-      } else if (c == '\'' || c == '"' || c == '`') { quote = c; cur.append(c) }
-      else if (c == sep) { parts += cur.toString; cur.clear() }
-      else cur.append(c)
-      i += 1
+        i += 1
+      }
     }
     parts += cur.toString
     parts.result()
@@ -1777,43 +1738,12 @@ object Engine {
     * [[substituteVars]] — a `?` inside one is commentary, not a parameter
     * (ADVICE r05). */
   private[graft] def bindPositional(stmt: String, args: Seq[String]): String = {
-    val out = new StringBuilder
-    var quote: Char = 0
-    var n = 0
-    var i = 0
-    def at(j: Int, c: Char): Boolean = j < stmt.length && stmt.charAt(j) == c
-    while (i < stmt.length) {
-      val c = stmt.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < stmt.length) {
-          out.append(stmt.charAt(i + 1)); i += 1
-        }
-      } else if (c == '\'' || c == '"' || c == '`') { quote = c; out.append(c) }
-      else if ((c == '-' && at(i + 1, '-')) || c == '#') {
-        while (i < stmt.length && stmt.charAt(i) != '\n') {
-          out.append(stmt.charAt(i)); i += 1
-        }
-        i -= 1
-      } else if (c == '/' && at(i + 1, '*')) {
-        out.append("/*"); i += 2
-        while (i < stmt.length && !(stmt.charAt(i) == '*' && at(i + 1, '/'))) {
-          out.append(stmt.charAt(i)); i += 1
-        }
-        if (i < stmt.length) { out.append("*/"); i += 1 }
-      } else if (c == '?') {
-        if (n >= args.length)
-          throw EngineError(1210, "HY000",
-            "Incorrect number of arguments to EXECUTE")
-        out.append(args(n)); n += 1
-      } else out.append(c)
-      i += 1
-    }
-    if (n != args.length)
-      throw EngineError(1210, "HY000",
-        "Incorrect number of arguments to EXECUTE")
-    out.toString
+    def arity = EngineError(1210, "HY000",
+      "Incorrect number of arguments to EXECUTE")
+    val (bound, n) = replaceMarkers(stmt)(k =>
+      if (k < args.length) args(k) else throw arity)
+    if (n != args.length) throw arity
+    bound
   }
 
   private def sqlLiteral(v: String): String =
@@ -1913,33 +1843,15 @@ object Engine {
   private[graft] def translateHashComments(q: String): String = {
     if (q.indexOf('#') < 0) return q
     val out = new StringBuilder
-    var quote: Char = 0
     var i = 0
     while (i < q.length) {
-      val c = q.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < q.length) {
-          out.append(q.charAt(i + 1)); i += 1
-        }
-        i += 1
-      } else if (c == '\'' || c == '"' || c == '`') {
-        quote = c; out.append(c); i += 1
-      } else if (c == '-' && i + 1 < q.length && q.charAt(i + 1) == '-') {
-        while (i < q.length && q.charAt(i) != '\n') {
-          out.append(q.charAt(i)); i += 1
-        }
-      } else if (c == '/' && i + 1 < q.length && q.charAt(i + 1) == '*') {
-        out.append("/*"); i += 2
-        while (i < q.length && !(q.charAt(i) == '*' &&
-            i + 1 < q.length && q.charAt(i + 1) == '/')) {
-          out.append(q.charAt(i)); i += 1
-        }
-        if (i < q.length) { out.append("*/"); i += 2 }
-      } else if (c == '#') {
-        out.append("-- "); i += 1
-      } else { out.append(c); i += 1 }
+      val e = MySqlLexer.spanEnd(q, i)
+      if (e == i) { out.append(q.charAt(i)); i += 1 }
+      else {
+        if (q.charAt(i) == '#') out.append("-- ").append(q.substring(i + 1, e))
+        else out.append(q.substring(i, e))
+        i = e
+      }
     }
     out.toString
   }
@@ -1957,7 +1869,6 @@ object Engine {
       """(?is)([A-Za-z_][A-Za-z0-9_]*)\s*(?:\([^()]*\))?\s+as\s*\(""".r
         .findAllMatchIn(query).map(_.group(1).toLowerCase).toSet
     val out = new StringBuilder
-    var quote: Char = 0
     var prevWord = ""
     var i = 0
     // expression-level FROM: inside EXTRACT(YEAR FROM ts), TRIM(BOTH ' '
@@ -2033,60 +1944,34 @@ object Engine {
         }
     while (i < query.length) {
       val c = query.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        // a closed literal becomes prevWord-clearing: `TRIM(BOTH 'x'
-        // FROM 'xax') AS t` must not leave prevWord=='from' alive for
-        // the word after the literal+paren (code-review r16 #1 fallout)
-        if (c == quote) { quote = 0; prevWord = "" }
-        else if (c == '\\' && quote != '`' && i + 1 < query.length) {
-          out.append(query.charAt(i + 1)); i += 1
-        }
-        i += 1
-      } else if (c == '`') {
+      val e = MySqlLexer.spanEnd(query, i)
+      if (c == '`' && e - 1 > i && query.charAt(e - 1) == '`') {
         // a backtick-quoted ref resolves identically to the bare spelling
-        // in MySQL (code-review r15 #5): peek the quoted name and qualify
-        // the whole token when it is an info-schema table in table position
-        val close = query.indexOf('`', i + 1)
-        val content = if (close < 0) "" else query.substring(i + 1, close)
+        // in MySQL (code-review r15 #5): qualify the whole token when the
+        // quoted name is an info-schema table in table position
+        val content = query.substring(i + 1, e - 1)
         val lw = content.toLowerCase
-        if (close > 0 && qualifies(lw,
-            afterDot = prevNonWsIsDot(i),
-            beforeDot = nextNonWsIsDot(close + 1))) {
+        val afterDot = prevNonWsIsDot(i)
+        val beforeDot = nextNonWsIsDot(e)
+        if (qualifies(lw, afterDot, beforeDot))
           out.append("information_schema.")
-            .append(query.substring(i, close + 1))
-          prevWord = lw
-          i = close + 1
-        } else if (close > 0 && missingHere(lw,
-            afterDot = prevNonWsIsDot(i),
-            beforeDot = nextNonWsIsDot(close + 1),
-            nextIdx = close + 1)) {
+        else if (missingHere(lw, afterDot, beforeDot, nextIdx = e))
           throw EngineError(1146, "42S02", s"Table '$content' doesn't exist")
-        } else if (close > 0) {
-          // NON-qualifying quoted identifier: consume the whole token and
-          // make it the new prevWord, so a following bare alias that
-          // collides with a metadata-view name (`FROM ``t`` tables`) is
-          // never treated as sitting in table position (ADVICE r15 —
-          // prevWord used to stay 'from'/'join' through the quote)
-          out.append(query.substring(i, close + 1))
-          prevWord = lw
-          i = close + 1
-        } else { quote = c; out.append(c); prevWord = ""; i += 1 }
-      } else if (c == '\'' || c == '"') {
-        quote = c; out.append(c); i += 1
-      } else if (c == '-' && i + 1 < query.length &&
-          query.charAt(i + 1) == '-') {
-        while (i < query.length && query.charAt(i) != '\n') {
-          out.append(query.charAt(i)); i += 1
-        }
-      } else if (c == '/' && i + 1 < query.length &&
-          query.charAt(i + 1) == '*') {
-        out.append("/*"); i += 2
-        while (i < query.length && !(query.charAt(i) == '*' &&
-            i + 1 < query.length && query.charAt(i + 1) == '/')) {
-          out.append(query.charAt(i)); i += 1
-        }
-        if (i < query.length) { out.append("*/"); i += 2 }
+        // the quoted name becomes prevWord either way, so a following bare
+        // alias that collides with a metadata-view name (`FROM ``t``
+        // tables`) is never in table position (ADVICE r15)
+        out.append(query.substring(i, e))
+        prevWord = lw
+        i = e
+      } else if (e > i) {
+        // comments and literals pass untouched — commented-out text never
+        // looks like a table ref (code-review r16 #2). A literal (or an
+        // unterminated backtick) clears prevWord: `TRIM(BOTH 'x' FROM
+        // 'xax') AS t` must not leave prevWord=='from' alive for the word
+        // after the literal+paren (code-review r16 #1 fallout)
+        out.append(query.substring(i, e))
+        if (c == '\'' || c == '"' || c == '`') prevWord = ""
+        i = e
       } else if (Character.isLetter(c) || c == '_') {
         val start = i
         while (i < query.length && {
@@ -2123,13 +2008,6 @@ object Engine {
           // (`… ON c STRAIGHT_JOIN t3`): a suspended FROM re-enters
           prevWord = "join"; inFrom = true; inJoinCond = false
         } else prevWord = lw
-      } else if (c == '#') {
-        // `#` comments pass untouched like the other comment forms —
-        // commented-out text must never look like a table ref
-        // (code-review r16 #2)
-        while (i < query.length && query.charAt(i) != '\n') {
-          out.append(query.charAt(i)); i += 1
-        }
       } else if (c == '(') {
         fnDepth = exprFnWords(prevWord) :: fnDepth
         fromStack = (inFrom, inJoinCond) :: fromStack
@@ -2171,50 +2049,30 @@ object Engine {
   private[graft] def rewriteInfoSchema(query: String): String = {
     // token-safe: quoted strings / backticks / comments pass untouched
     val out = new StringBuilder
-    var quote: Char = 0
     var i = 0
-    def at(j: Int, c: Char): Boolean =
-      j < query.length && query.charAt(j) == c
     // both spellings: bare and the backticked form GUI tools emit
     // (`information_schema`.`tables`); trailing lookahead instead of \b
     // because a closing backtick may follow the name
     val headRe = """(?is)^`?information_schema`?\s*\.\s*`?(tables|columns|schemata|statistics|key_column_usage|referential_constraints)`?(?![A-Za-z0-9_])""".r
     while (i < query.length) {
       val c = query.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < query.length) {
-          out.append(query.charAt(i + 1)); i += 1
-        }
-      } else if ((c == 'i' || c == 'I' || c == '`') &&
-          (i == 0 || { val p = query.charAt(i - 1)
-            !Character.isLetterOrDigit(p) && p != '_' && p != '.' && p != '`' })) {
-        // try the information_schema head BEFORE generic backtick-quote
-        // handling, so the backticked spelling rewrites too
-        headRe.findFirstMatchIn(query.substring(i)) match {
-          case Some(m) =>
-            out.append("graft_is_").append(m.group(1).toLowerCase)
-            i += m.matched.length - 1
-          case None =>
-            if (c == '`') quote = c
-            out.append(c)
-        }
-      } else if (c == '\'' || c == '"' || c == '`') { quote = c; out.append(c) }
-      else if (c == '-' && at(i + 1, '-')) {
-        while (i < query.length && query.charAt(i) != '\n') {
-          out.append(query.charAt(i)); i += 1
-        }
-        i -= 1
-      } else if (c == '/' && at(i + 1, '*')) {
-        out.append("/*"); i += 2
-        while (i < query.length &&
-            !(query.charAt(i) == '*' && at(i + 1, '/'))) {
-          out.append(query.charAt(i)); i += 1
-        }
-        if (i < query.length) { out.append("*/"); i += 1 }
-      } else out.append(c)
-      i += 1
+      // try the information_schema head BEFORE the lexer, so the
+      // backticked spelling rewrites too
+      val head =
+        if ((c == 'i' || c == 'I' || c == '`') &&
+            (i == 0 || { val p = query.charAt(i - 1)
+              !Character.isLetterOrDigit(p) && p != '_' && p != '.' && p != '`' }))
+          headRe.findFirstMatchIn(query.substring(i))
+        else None
+      head match {
+        case Some(m) =>
+          out.append("graft_is_").append(m.group(1).toLowerCase)
+          i += m.matched.length
+        case None =>
+          val e = MySqlLexer.spanEnd(query, i)
+          if (e > i) { out.append(query.substring(i, e)); i = e }
+          else { out.append(c); i += 1 }
+      }
     }
     out.toString
   }
@@ -2297,55 +2155,27 @@ object Engine {
     }
   }
 
-  /** Split a CREATE TABLE body on TOP-LEVEL commas — parens (type args,
-    * ENUM lists) and quoted strings (defaults, comments) nest. */
-  private def splitColumnDefs(body: String): Seq[String] = {
-    val parts = Seq.newBuilder[String]
-    val cur = new StringBuilder
-    var depth = 0
-    var quote: Char = 0
-    var i = 0
-    while (i < body.length) {
-      val c = body.charAt(i)
-      if (quote != 0) {
-        cur.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < body.length) {
-          cur.append(body.charAt(i + 1)); i += 1
-        }
-      } else c match {
-        case '\'' | '"' | '`' => quote = c; cur.append(c)
-        case '(' => depth += 1; cur.append(c)
-        case ')' => depth -= 1; cur.append(c)
-        case ',' if depth == 0 => parts += cur.toString; cur.clear()
-        case _ => cur.append(c)
-      }
-      i += 1
-    }
-    if (cur.nonEmpty) parts += cur.toString
-    parts.result().map(_.trim).filter(_.nonEmpty)
-  }
+  /** A CREATE TABLE body's column and constraint definitions: split on
+    * commas outside parens (type args, ENUM lists), literals and comments,
+    * each definition without its leading comments. */
+  private def splitColumnDefs(body: String): Seq[String] =
+    splitTopLevel(body, ',', nested = true)
+      .map(d => stripLeadingComments(d).trim).filter(_.nonEmpty)
 
-  /** Index just past the close paren matching an already-consumed open
-    * paren at the start of `rest` (token-safe), or -1 if unbalanced. */
-  private def matchingClose(rest: String): Int = {
+  /** Index of the `)` closing a paren opened just before `from` — never one
+    * inside a literal or comment — or -1 if unbalanced. */
+  private def matchingClose(s: String, from: Int = 0): Int = {
     var depth = 1
-    var quote: Char = 0
-    var i = 0
-    while (i < rest.length) {
-      val c = rest.charAt(i)
-      if (quote != 0) {
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < rest.length) i += 1
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' =>
-          depth -= 1
-          if (depth == 0) return i
-        case _ => ()
+    var i = from
+    while (i < s.length) {
+      val e = MySqlLexer.spanEnd(s, i)
+      if (e > i) i = e
+      else {
+        val c = s.charAt(i)
+        if (c == '(') depth += 1
+        else if (c == ')') { depth -= 1; if (depth == 0) return i }
+        i += 1
       }
-      i += 1
     }
     -1
   }
@@ -2531,28 +2361,13 @@ object Engine {
   private[graft] def substituteVars(query: String, sys: Map[String, String],
       user: Map[String, String], fns: Map[String, String] = Map.empty): String = {
     val out = new StringBuilder
-    var quote: Char = 0
     var i = 0
     def at(j: Int, c: Char): Boolean = j < query.length && query.charAt(j) == c
     while (i < query.length) {
       val c = query.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < query.length) {
-          out.append(query.charAt(i + 1)); i += 1
-        }
-      } else if (c == '\'' || c == '"' || c == '`') { quote = c; out.append(c) }
-      else if (c == '-' && at(i + 1, '-')) {
-        while (i < query.length && query.charAt(i) != '\n') { out.append(query.charAt(i)); i += 1 }
-        i -= 1
-      } else if (c == '/' && at(i + 1, '*')) {
-        out.append("/*"); i += 2
-        while (i < query.length && !(query.charAt(i) == '*' && at(i + 1, '/'))) {
-          out.append(query.charAt(i)); i += 1
-        }
-        if (i < query.length) { out.append("*/"); i += 1 }
-      } else if (c == '@' && at(i + 1, '@')) {
+      val e = MySqlLexer.spanEnd(query, i)
+      if (e > i) { out.append(query.substring(i, e)); i = e - 1 }
+      else if (c == '@' && at(i + 1, '@')) {
         varNameRe.findFirstMatchIn(query.substring(i + 2)) match {
           case Some(m) =>
             val name = m.group(2).toLowerCase
@@ -2620,31 +2435,15 @@ object Engine {
     * with Spark must translate to keep that client contract. */
   def translateMySql(query: String): String = {
     val out = new StringBuilder
-    var quote: Char = 0
     var i = 0
-    def at(j: Int, c: Char): Boolean = j < query.length && query.charAt(j) == c
     val limitRe = """(?is)^LIMIT\s+(\d+)\s*,\s*(\d+)""".r
     while (i < query.length) {
       val c = query.charAt(i)
-      if (quote != 0) {
-        out.append(c)
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`' && i + 1 < query.length) {
-          out.append(query.charAt(i + 1)); i += 1
-        }
-      } else if (c == '\'' || c == '"' || c == '`') { quote = c; out.append(c) }
-      else if (c == '-' && at(i + 1, '-')) {
-        while (i < query.length && query.charAt(i) != '\n') { out.append(query.charAt(i)); i += 1 }
-        i -= 1
-      } else if (c == '#') {
-        while (i < query.length && query.charAt(i) != '\n') i += 1
-        i -= 1
-      } else if (c == '/' && at(i + 1, '*')) {
-        out.append("/*"); i += 2
-        while (i < query.length && !(query.charAt(i) == '*' && at(i + 1, '/'))) {
-          out.append(query.charAt(i)); i += 1
-        }
-        if (i < query.length) { out.append("*/"); i += 1 }
+      val e = MySqlLexer.spanEnd(query, i)
+      if (e > i) {
+        // literals and comments copy through; `#` comments strip
+        if (c != '#') out.append(query.substring(i, e))
+        i = e - 1
       } else if ((c == 'l' || c == 'L') &&
           (i == 0 || !Character.isLetterOrDigit(query.charAt(i - 1)))) {
         limitRe.findFirstMatchIn(query.substring(i)) match {
@@ -2682,33 +2481,20 @@ object Engine {
     * error surfaces — the transparent-relay contract). The expr argument is
     * itself re-translated (nested dialect forms). */
   private def rewriteDateFormat(query: String, start: Int): Option[(String, Int)] = {
-    var depth = 1
-    var quote: Char = 0
-    var topComma = -1
-    var i = start
-    while (i < query.length && depth > 0) {
-      val c = query.charAt(i)
-      if (quote != 0) {
-        if (c == quote) quote = 0
-        else if (c == '\\' && quote != '`') i += 1
-      } else c match {
-        case '\'' | '"' | '`' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 1 && topComma < 0 => topComma = i
-        case _ =>
-      }
-      i += 1
+    val end = matchingClose(query, start)
+    if (end < 0) return None
+    splitTopLevel(query.substring(start, end), ',', nested = true) match {
+      case Seq(expr, arg) =>
+        val fmtArg = arg.trim
+        if (fmtArg.length < 2 || fmtArg.head != '\'' || fmtArg.last != '\'' ||
+            fmtArg.substring(1, fmtArg.length - 1).contains('\''))
+          None
+        else {
+          val javaFmt = mysqlDateFmtToJava(fmtArg.substring(1, fmtArg.length - 1))
+          Some((s"date_format(${translateMySql(expr)}, '$javaFmt')", end))
+        }
+      case _ => None
     }
-    if (depth != 0 || topComma < 0) return None
-    val end = i - 1 // index of the matching ')'
-    val expr = query.substring(start, topComma)
-    val fmtArg = query.substring(topComma + 1, end).trim
-    if (fmtArg.length < 2 || fmtArg.head != '\'' || fmtArg.last != '\'' ||
-        fmtArg.substring(1, fmtArg.length - 1).contains('\''))
-      return None
-    val javaFmt = mysqlDateFmtToJava(fmtArg.substring(1, fmtArg.length - 1))
-    Some((s"date_format(${translateMySql(expr)}, '$javaFmt')", end))
   }
 
   /** MySQL `DATE_FORMAT` %-codes → Java datetime pattern letters. Unmapped

@@ -70,6 +70,19 @@ object DedupQueries extends QueryModule {
       .agg(sigCol(0), (1 until numHashes).map(sigCol): _*)
   }
 
+  /** shingle → the set of sources containing it (q162's source sets).
+    * collect_set dedupes by itself, so raw shingle instances flow straight
+    * into the map-side-combinable set build with no separate DISTINCT
+    * exchange. q162 checkpoints the result; PlanSpec plans it directly. */
+  private[graft] def sourceSets(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Tables.spread(spark.table("documents"))
+      .select($"source", split(lower($"text"), " ").as("toks"))
+      .select($"source", explode(shingles($"toks")).as("shingle"))
+      .groupBy($"shingle")
+      .agg(collect_set($"source").as("ss"))
+  }
+
   /** The fixture corpus's MinHash signature relation, memoized per
     * (session, fixture dir) — one row per doc, consumed by q72 and every
     * LSH banding below. Deterministic (order-pinned MIN folds), so memo ==
@@ -1945,20 +1958,11 @@ object DedupQueries extends QueryModule {
          |FROM inter JOIN tot ta ON ta.source = source_a
          |ORDER BY source_a, source_b""".stripMargin) { spark =>
       import spark.implicits._
-      val toks = Tables.spread(spark.table("documents"))
-        .select($"source", split(lower($"text"), " ").as("toks"))
-      // r19: collect_set dedupes by itself, so the separate DISTINCT pass
-      // (a full second exchange) and the (source, shingle)-grained
-      // checkpoint are gone — raw shingle instances flow straight into the
-      // map-side-combinable set build, and the per-source totals derive
-      // FROM the vocabulary-sized source-set relation (a shingle's set
-      // contains a source exactly once ⇔ one distinct (source, shingle)
-      // row), which is what gets checkpointed for its two consumers.
-      val ssets = toks
-        .select($"source", explode(shingles($"toks")).as("shingle"))
-        .groupBy($"shingle")
-        .agg(collect_set($"source").as("ss"))
-        .localCheckpoint()
+      // the per-source totals derive FROM the vocabulary-sized source-set
+      // relation (a shingle's set contains a source exactly once ⇔ one
+      // distinct (source, shingle) row), which is what gets checkpointed
+      // for its two consumers
+      val ssets = sourceSets(spark).localCheckpoint()
       val tot = ssets.select(explode($"ss").as("source_a"))
         .groupBy($"source_a").agg(count(lit(1)).as("shingles_a"))
       val pairs = ssets

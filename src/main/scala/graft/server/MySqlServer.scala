@@ -1324,7 +1324,8 @@ final class MySqlServer private (listener: ServerSocket,
           case ComStmtPrepare =>
             val sr = new SeqRef(base)
             try {
-              val ps = session.prepareStatement(tail)
+              // the MySQL-dialect translation COM_QUERY applies (sqlMySql)
+              val ps = session.prepareStatement(Engine.translateMySql(tail))
               sr.v = writePacket(out, sr.v,
                 prepareOkPayload(ps.statementId, ps.paramCount))
               if (ps.paramCount > 0) {

@@ -5,10 +5,11 @@ import org.scalacheck.Prop.forAll
 
 /** Mechanized adversary for the statement-interception layer (VERDICT r15
   * #3): the r14/r15 manual review passes kept finding the same bug classes
-  * in the hand-rolled MySQL-dialect parsing — case sensitivity, backticks,
-  * comments, whitespace, string literals containing trigger keywords,
-  * CTE/alias shadowing, state-mutation ordering. This generates statements
-  * across those axes and asserts the three contracts:
+  * in the MySQL-dialect layer — case sensitivity, backticks, comments,
+  * whitespace, string literals containing trigger keywords, CTE/alias
+  * shadowing, state-mutation ordering. Its quote, escape and comment rules
+  * live in one place, [[MySqlLexer]]. This generates statements across
+  * those axes and asserts the three contracts:
   *
   *   (a) interception fires exactly when it should (every MySQL-shaped
   *       session statement is absorbed under any keyword casing,
@@ -226,6 +227,34 @@ object DialectAdversaryProps extends Properties("DialectAdversary") {
       ok && code == 1065 && sessA.userVar("adv_v").contains("0")
     }
 
+  // ---- the lexer every scan above reads its spans from ----------------------
+
+  property("MySqlLexer.spanEnd: each span rule, escapes, code characters, " +
+      "and unterminated forms") = {
+    // (text, start, expected end); end == start means code
+    val cases = Seq(
+      ("'a\\'b' x", 0, 6), // backslash escapes the quote
+      ("\"a\"\"b\"", 0, 3), // doubled quote: two adjacent strings
+      ("`a\\`b`", 0, 4), // backticks have no escapes
+      ("-- c\nx", 0, 4), // line comments stop before the newline
+      ("--c", 0, 3), // `--` needs nothing after it
+      ("# c\nx", 0, 3),
+      ("/* a */x", 0, 7),
+      ("/**/x", 0, 4),
+      ("/*!40101 SET x */;", 0, 17),
+      ("/*+ BROADCAST(t) */ x", 0, 19),
+      ("SELECT 'a' x", 7, 10),
+      ("'abc", 0, 4), ("`abc", 0, 4), ("/* abc", 0, 6), ("/*/", 0, 3),
+      ("'ab\\", 0, 4), // trailing backslash
+      ("x", 0, 0), ("-x", 0, 0), ("/x", 0, 0), ("-", 0, 0), ("?", 0, 0))
+    val bad = cases.filterNot { case (t, i, e) => MySqlLexer.spanEnd(t, i) == e }
+    bad.foreach { case (t, i, e) =>
+      println(s"MySqlLexer.spanEnd(${t.replace("\n", "\\n")}, $i) = " +
+        s"${MySqlLexer.spanEnd(t, i)}, expected $e")
+    }
+    bad.isEmpty
+  }
+
   // ---- statement splitting (the sqlBatch seam) ------------------------------
 
   /** One batch member plus the exact split output it must produce (None =
@@ -271,6 +300,8 @@ object DialectAdversaryProps extends Properties("DialectAdversary") {
       Right("\"what?\""),
       Right("/* bound? no */"),
       Right("`odd?col`"),
+      Right("-- is it?\n"),
+      Right("# what?\n"),
       Right("SELECT col ,"),
       Right("WHERE x =")))
 
@@ -346,11 +377,20 @@ object DialectAdversaryProps extends Properties("DialectAdversary") {
 
   // ---- variable substitution is literal-safe --------------------------------
 
+  /** Spellings whose text is never code: both string quotes and the three
+    * comment forms. */
+  private val shelter: Gen[String => String] = Gen.oneOf(
+    (t: String) => s"'$t'", (t: String) => s"\"$t\"",
+    (t: String) => s"# $t\n", (t: String) => s"-- $t\n",
+    (t: String) => s"/* $t */")
+
   property("@@sysvar/@uservar tokens inside string literals never " +
       "substitute; outside they always do") =
-    forAll(Gen.oneOf("version", "autocommit", "sql_mode"),
-        Gen.oneOf("'", "\"")) { (v, q) =>
-      val lit = s"SELECT $q@@$v, @u$q AS x"
+    forAll(Gen.oneOf("version", "autocommit", "sql_mode"), shelter) {
+        (v, sh) =>
+      // comments shelter like literals: even an unknown name inside one is
+      // never resolved (no ER 1193)
+      val lit = s"SELECT ${sh(s"@@$v, @u, @@no_such_var")} AS x"
       val out = sessB.substituted(lit)
       val open = sessB.substituted(s"SELECT @@$v AS x")
       out == lit && open != s"SELECT @@$v AS x" && !open.contains("@@")

@@ -828,6 +828,17 @@ class EngineSpec extends SparkSpec {
     intercept[Exception](
       s.sql("CREATE TABLE t_spark (a int) USING nosuchformat OPTIONS (x 'y')"))
     assert(s.sql("SHOW TABLES LIKE 't_spark'").count() == 0)
+    // comments in the column list are commentary: a `--` comment carrying
+    // a comma and a block comment carrying a paren still land the session
+    // temp view with exactly the declared columns
+    Seq("CREATE TABLE t_cmt (a INT, -- note, b\n b INT)",
+        "CREATE TABLE t_cmt (a INT /* ( */, b INT)").foreach { ddl =>
+      s.sql(ddl)
+      assert(s.spark.catalog.getTable("t_cmt").isTemporary, ddl)
+      assert(s.spark.table("t_cmt").schema.simpleString ==
+        "struct<a:int,b:int>", ddl)
+      s.sql("DROP TABLE t_cmt")
+    }
     s.sql("DROP TABLE t_dump")
     assert(s.sql("SHOW TABLES LIKE 't_dump'").count() == 0)
   }
@@ -1319,6 +1330,10 @@ class EngineSpec extends SparkSpec {
     // client-identity functions substitute per-execute too
     val psId = s.prepareStatement("SELECT CONNECTION_ID() AS cid")
     assert(psId.execute().head().get(0).toString == s.connectionId.toString)
+    // an @@name inside a `#` comment is commentary, never resolved (no
+    // ER 1193 for the unknown variable)
+    val psHash = s.prepareStatement("SELECT ? AS x # @@no_such_var\n")
+    assert(psHash.execute(7).head().getInt(0) == 7)
     // session-command-shaped statements WITH parameters: the bound value
     // must reach the command, never the literal '?' (code-review r14)
     val psSet = s.prepareStatement("SET @bound = ?")
@@ -1336,7 +1351,7 @@ class EngineSpec extends SparkSpec {
     assert(got == Seq((1, "a"), (2, "b'quoted")), got.toString)
     s.sql("DROP TABLE t_ps_ins")
     psVar.close(); psShow.close(); psIs.close(); psId.close()
-    psSet.close(); psIns.close()
+    psHash.close(); psSet.close(); psIns.close()
     s.close()
   }
 
