@@ -64,8 +64,8 @@ object Bench {
   val loadCorrelatedThreshold = 0.45
 
   /** Intra-run sentinel sampling cadence (queries per single-shot kernel
-    * sample). Object-level so WireBench shares the cadence — position
-    * reconstruction in both artifacts assumes the same convention. */
+    * sample). Position reconstruction in the bench artifact (the `slow`
+    * entries' neighborhood samples) assumes this convention. */
   val sentinelEvery = 30
 
   /** Self-adjudication of one tripwire against the run's OWN sentinel

@@ -358,7 +358,7 @@ object Engine {
       questions += 1
       // a WHOLE-statement version-conditional comment executes its body
       // (mysqldump's opening/closing sequences) — one seam covers every
-      // caller: sql, stream, sqlBatch/streamBatch, the wire COM_QUERY path
+      // caller: sql, sqlMySql, batch, the wire COM_QUERY path
       val query0 = preprocess(query)
       // interception MATCHES on comment-stripped text (clients prefix
       // statements with `/* ping */`-style comments; MySQL parses through
@@ -508,7 +508,7 @@ object Engine {
       userVars.get(name.toLowerCase)
 
     /** Text-protocol prepared statements (`PREPARE name FROM '…?…'`) — the
-      * SQL-level cousin of [[prepare]] (COM_STMT_PREPARE analog): the
+      * SQL-level cousin of [[prepareStatement]] (COM_STMT_PREPARE analog): the
       * gateway relays both forms opaquely and tracks only the status bits
       * (/root/reference/mysql/constants.go:22-37). Bound on EXECUTE with
       * `?` placeholders replaced by USING user-variable values, token-safe
@@ -517,68 +517,38 @@ object Engine {
       scala.collection.mutable.Map.empty[String, String]
     def table(name: String): DataFrame = spark.table(name)
 
-    /** Incremental result delivery — the analog of the outbound relay that
-      * buffers row packets and flushes per result set
-      * (/root/reference/gateway/relay.go:68-99): rows stream to the caller
-      * partition by partition; the driver never holds the full result. */
-    def stream(query: String): Iterator[org.apache.spark.sql.Row] = {
-      import scala.jdk.CollectionConverters._
-      val it = sql(query).toLocalIterator().asScala
-      openCursor = Some(it)
-      it
-    }
-
-    /** The last [[stream]] iterator handed out (cursor-state source for
-      * [[statusFlags]]) and the streamBatch more-results bit. */
-    private var openCursor: Option[Iterator[org.apache.spark.sql.Row]] = None
-    private[Engine] var moreResults = false
-
-    /** Live SERVER_STATUS word (/root/reference/mysql/constants.go:22-37):
-      * in-transaction and autocommit track session state, cursor bits track
-      * the last [[stream]] iterator (CURSOR_EXISTS while rows remain,
-      * LAST_ROW_SENT once drained), MORE_RESULTS_EXISTS is set between
-      * [[streamBatch]] result sets. */
+    /** Live SERVER_STATUS word (/root/reference/mysql/constants.go:22-37)
+      * of the SESSION: in-transaction and autocommit. MySQL clears the
+      * per-command bits at the start of every command
+      * (`SERVER_STATUS_CLEAR_SET`), so they never live here: a statement's
+      * cursor bits come from [[PreparedStatement.statusFlags]] on its own
+      * EXECUTE/FETCH responses, and MORE_RESULTS_EXISTS from the caller
+      * walking a [[batch]]. */
     def statusFlags: Int = {
       var f = 0
       if (inTrans) f |= Engine.Status.InTrans
       if (sysVars.getOrElse("autocommit", "1") == "1")
         f |= Engine.Status.Autocommit
-      if (moreResults) f |= Engine.Status.MoreResultsExists
-      openCursor.foreach { it =>
-        f |= (if (it.hasNext) Engine.Status.CursorExists
-              else Engine.Status.LastRowSent)
-      }
       f
     }
 
-    /** Multi-statement batch against this session (ClientMultiStatements);
-      * each statement runs through [[sql]], so handshake-style batches
-      * (`SET NAMES utf8mb4; SET autocommit=1; SELECT @@version`) accumulate
-      * session state exactly like a sequence of single statements. */
-    def sqlBatch(batch: String): Seq[DataFrame] =
-      Engine.splitStatements(batch).map(sql)
-
-    /** Incremental multi-statement delivery — [[stream]] × [[sqlBatch]]:
-      * the analog of the gateway's flush-per-result-set outbound relay
-      * under ClientMultiResults (/root/reference/gateway/relay.go:85-99 —
-      * each result set is flushed to the client before the next statement's
-      * rows arrive). Statements execute IN ORDER as the caller reaches
-      * them (session state accumulates exactly like sequential [[sql]]
-      * calls, and a failing later statement doesn't poison earlier result
-      * sets), and each result set streams row-by-row without driver
-      * materialization. */
-    def streamBatch(batch: String): Iterator[(Int, Iterator[org.apache.spark.sql.Row])] = {
-      val base = Engine.splitStatements(batch).iterator.zipWithIndex
-      new Iterator[(Int, Iterator[org.apache.spark.sql.Row])] {
-        def hasNext: Boolean = base.hasNext
-        def next(): (Int, Iterator[org.apache.spark.sql.Row]) = {
-          val (q, i) = base.next()
-          val rows = stream(q)
-          // SERVER_MORE_RESULTS_EXISTS stays up until the last result set
-          moreResults = base.hasNext
-          (i, rows)
-        }
-      }
+    /** A MySQL multi-statement text (ClientMultiStatements) as its result
+      * sets, one per statement — the one batch entry for the wire's
+      * COM_QUERY and in-process callers. The text is split once
+      * ([[Engine.splitStatements]]: token-safe, `#` comments stripped) and
+      * each statement runs through [[sqlMySql]] only when the iterator
+      * reaches it, so statements execute lazily and IN ORDER: session state
+      * accumulates like sequential calls (`SET NAMES utf8mb4; SET
+      * autocommit=1; SELECT @@version` behaves as three single statements),
+      * a later failing statement never poisons earlier result sets, and
+      * `hasNext` never runs anything — it is the MORE_RESULTS_EXISTS bit of
+      * the flush-per-result-set relay
+      * (/root/reference/gateway/relay.go:85-99). A text holding at most one
+      * statement runs as given, unsplit. */
+    def batch(text: String): Iterator[DataFrame] = {
+      val stmts = Engine.splitStatements(text)
+      (if (stmts.lengthCompare(1) > 0) stmts else Seq(text))
+        .iterator.map(sqlMySql)
     }
 
     /** Execute SQL written in the MySQL dialect the reference's clients
@@ -589,15 +559,6 @@ object Engine {
       * `group_concat`). */
     def sqlMySql(query: String): DataFrame = sql(Engine.translateMySql(query))
 
-    /** Prepared statement — the engine analog of COM_STMT_PREPARE/EXECUTE
-      * (the gateway tracks prepared-statement status bits and relays the
-      * binary protocol opaquely, /root/reference/mysql/constants.go:22-37):
-      * parse once, bind named parameters per execution via Spark's
-      * parameterized SQL (injection-safe, like wire-protocol binary params).
-      */
-    def prepare(query: String): Map[String, Any] => DataFrame =
-      params => spark.sql(query, params)
-
     // ---- binary prepared-statement protocol analog ----------------------
 
     /** Statement-id counter + registry backing the binary-protocol analog
@@ -605,35 +566,35 @@ object Engine {
     private val stmtCounter = new java.util.concurrent.atomic.AtomicLong(0)
     private[Engine] val stmts =
       scala.collection.mutable.Map.empty[Long, PreparedStatement]
-    /** Held cursors per statement id (COM_STMT_FETCH state). */
-    private[Engine] val stmtCursors =
-      scala.collection.mutable.Map.empty[Long, Iterator[org.apache.spark.sql.Row]]
 
     /** COM_STMT_PREPARE analog — the binary-protocol entry real connectors
       * (JDBC, mysql-connector) use by default; the gateway relays it
       * end-to-end (capability bits /root/reference/mysql/constants.go:40-66,
-      * relay /root/reference/gateway/relay.go:47-99). Returns a typed handle
-      * carrying the statement id and the `?` parameter count (counted
-      * token-safely, like the prepare-response's num_params field);
-      * parameters later bind TYPED — never through the SQL text. */
+      * relay /root/reference/gateway/relay.go:47-99). The text is MySQL
+      * dialect and goes through [[Engine.translateMySql]] like [[sqlMySql]],
+      * so a statement prepares the same in-process and over the wire.
+      * Returns a typed handle carrying the statement id and the `?`
+      * parameter count (counted token-safely, like the prepare-response's
+      * num_params field); parameters later bind TYPED — never through the
+      * SQL text. */
     def prepareStatement(query: String): PreparedStatement = {
       val id = stmtCounter.incrementAndGet()
-      val ps = new PreparedStatement(this, id, query,
-        Engine.countParams(query))
+      val translated = Engine.translateMySql(query)
+      val ps = new PreparedStatement(this, id, translated,
+        Engine.countParams(translated))
       stmts(id) = ps
       ps
     }
 
     /** COM_STMT_FETCH analog: pull up to `n` rows from the held cursor of
-      * statement `handle` (opened by [[PreparedStatement.executeCursor]]).
-      * SERVER_STATUS_CURSOR_EXISTS stays up while rows remain and flips to
-      * LAST_ROW_SENT once the cursor drains ([[statusFlags]] — the bits at
-      * /root/reference/mysql/constants.go:28-29 the gateway forwards).
+      * statement `handle` (opened by [[PreparedStatement.executeCursor]]);
+      * the statement's own [[PreparedStatement.statusFlags]] then reports
+      * CURSOR_EXISTS while rows remain and LAST_ROW_SENT once it drains.
       * Fetching a handle with no open cursor is MySQL's 1324-adjacent
       * sequence error (the reference relays the backend's ERR verbatim;
       * here it is the structured engine error). */
     def fetch(handle: Long, n: Int): Seq[org.apache.spark.sql.Row] = {
-      val it = stmtCursors.getOrElse(handle,
+      val it = stmts.get(handle).flatMap(_.cursor).getOrElse(
         throw EngineError(1105, "08S01",
           s"no open cursor for statement $handle (execute with cursor first)"))
       val out = Vector.newBuilder[org.apache.spark.sql.Row]
@@ -642,44 +603,25 @@ object Engine {
       out.result()
     }
 
-    private[Engine] def openStmtCursor(handle: Long,
-        rows: Iterator[org.apache.spark.sql.Row]): Unit = {
-      stmtCursors(handle) = rows
-      openCursor = Some(rows) // cursor bits surface through statusFlags
-    }
-
-    private[Engine] def closeStmt(handle: Long): Unit = {
-      stmts.remove(handle)
-      stmtCursors.remove(handle)
-    }
-
     /** Prepared-statement lookup by id — the wire front-end's
-      * COM_STMT_EXECUTE/RESET/CLOSE resolve their handles through this. */
+      * COM_STMT_EXECUTE/FETCH/RESET/CLOSE resolve their handles through
+      * this. */
     private[graft] def statement(handle: Long): Option[PreparedStatement] =
       stmts.get(handle)
-
-    /** Per-STATEMENT cursor liveness — the wire front-end's COM_STMT_FETCH
-      * status word must report the FETCHED statement's cursor, not the
-      * session-level [[statusFlags]] bit that tracks only the most recently
-      * opened stream (two open cursors would otherwise never show
-      * LAST_ROW_SENT for the first one drained). */
-    private[graft] def cursorHasNext(handle: Long): Option[Boolean] =
-      stmtCursors.get(handle).map(_.hasNext)
 
     /** COM_QUIT analog: cancel in-flight work and leave the processlist
       * (temp views die with the session wrapper). */
     /** COM_RESET_CONNECTION analog (`mysql_reset_connection`): drop all
-      * session state — user variables, text and binary prepared statements,
-      * open cursors, the transaction flag, and system variables back to the
-      * connect-time defaults — without re-running the handshake. The data
-      * namespace binding (routed cluster/database) survives, exactly like
-      * the real command (it re-auths nothing and changes no schema). */
+      * session state — user variables, text and binary prepared statements
+      * (with their cursors), the transaction flag, and system variables
+      * back to the connect-time defaults — without re-running the
+      * handshake. The data namespace binding (routed cluster/database)
+      * survives, exactly like the real command (it re-auths nothing and
+      * changes no schema). */
     def resetConnection(): Unit = {
       userVars.clear()
       prepared.clear()
       stmts.clear()
-      stmtCursors.clear()
-      openCursor = None
       inTrans = false
       sysVars.clear()
       sysVars ++= Engine.defaultSysVars
@@ -900,29 +842,52 @@ object Engine {
     @volatile private[graft] var lastSchema: org.apache.spark.sql.types.StructType =
       org.apache.spark.sql.types.StructType(Nil)
 
-    /** COM_STMT_EXECUTE analog: bind typed positional parameters, run. */
-    def execute(args: Any*): DataFrame = bind(args)
-
-    /** Execute and stream the result as a typed-row iterator — the binary
-      * protocol's row format is typed (not stringly lenenc text); Row
-      * preserves each column's JVM type the same way. Rows stream
-      * partition-by-partition, never a driver collect. */
-    def executeRows(args: Any*): Iterator[org.apache.spark.sql.Row] = {
-      import scala.jdk.CollectionConverters._
-      bind(args).toLocalIterator().asScala
+    /** COM_STMT_EXECUTE analog: bind typed positional parameters, run.
+      * Re-executing closes the statement's held cursor, like MySQL. */
+    def execute(args: Any*): DataFrame = {
+      cursor = None
+      bind(args)
     }
 
+    /** The held result of the last [[executeCursor]] — read by
+      * [[Session.fetch]], dropped by [[execute]] and [[close]]. */
+    private[Engine] var cursor: Option[Iterator[org.apache.spark.sql.Row]] =
+      None
+
     /** COM_STMT_EXECUTE with CURSOR_TYPE_READ_ONLY: run, but HOLD the
-      * result as a server-side cursor — rows are pulled in batches by
-      * [[Session.fetch]] (COM_STMT_FETCH), with CURSOR_EXISTS /
-      * LAST_ROW_SENT transitioning per batch. */
+      * result as a server-side cursor over [[Engine.drain]] — rows are
+      * pulled in batches by [[Session.fetch]] (COM_STMT_FETCH). */
     def executeCursor(args: Any*): Unit = {
-      import scala.jdk.CollectionConverters._
-      s.openStmtCursor(statementId, bind(args).toLocalIterator().asScala)
+      cursor = None // a failed execute closes the old cursor too
+      cursor = Some(Engine.drain(bind(args)))
+    }
+
+    /** This statement's SERVER_STATUS word for its own EXECUTE and FETCH
+      * responses: the session's bits plus CURSOR_EXISTS while its held
+      * cursor has rows left, LAST_ROW_SENT once the cursor drains
+      * (/root/reference/mysql/constants.go:28-29, the bits the gateway
+      * forwards). No other command's response carries them. */
+    def statusFlags: Int = s.statusFlags | cursor.fold(0) { it =>
+      if (it.hasNext) Engine.Status.CursorExists else Engine.Status.LastRowSent
     }
 
     /** COM_STMT_CLOSE analog: drop the handle and any held cursor. */
-    def close(): Unit = s.closeStmt(statementId)
+    def close(): Unit = {
+      cursor = None
+      s.stmts.remove(statementId)
+    }
+  }
+
+  /** The one row drain: every result the engine hands out row by row —
+    * wire text result sets, wire binary result sets and held cursors
+    * ([[PreparedStatement.executeCursor]]) — reads its rows through here,
+    * and nothing else in the engine calls `toLocalIterator`. Rows arrive
+    * partition by partition (the incremental relay of
+    * /root/reference/gateway/relay.go:68-99); the driver never holds the
+    * whole result. */
+  private[graft] def drain(df: DataFrame): Iterator[org.apache.spark.sql.Row] = {
+    import scala.jdk.CollectionConverters._
+    df.toLocalIterator().asScala
   }
 
   /** Rewrite each token-safe `?` marker to a named `:_gp_n` parameter and
@@ -2719,14 +2684,17 @@ object Engine {
     * cluster id with an empty backend user
     * (/root/reference/gateway/gateway.go:253-259; the :4000 default-port
     * append at gateway.go:261-264 has no analog here — namespaces are
-    * directories, not addresses). */
+    * directories, not addresses). The one routing rule: the wire handshake
+    * and COM_CHANGE_USER log in through here too, passing the client's
+    * connect attributes as `attrs`. */
   def login(shared: SparkSession, userName: String,
       backends: Map[String, String], db: Option[String] = None,
-      databases: Map[String, String] = Map.empty): Session = {
+      databases: Map[String, String] = Map.empty,
+      attrs: Map[String, String] = Map.empty): Session = {
     val (clusterId, user) = userName.split("\\.", 2) match {
       case Array(c, u) => (c, u)
       case Array(c) => (c, "")
     }
-    connect(shared, clusterId, backends, db, databases, user)
+    connect(shared, clusterId, backends, db, databases, user, attrs)
   }
 }

@@ -7,10 +7,10 @@ package graft
   * Usage: runMain graft.Sql <sfDir> <sql...>
   * e.g.   runMain graft.Sql /root/testdata/sf0.001 "SELECT COUNT(*) FROM lineitem"
   *
-  * Statements relay through [[Engine.Session]] exactly like the gateway
-  * relays client traffic (/root/reference/gateway/relay.go:47-99): routing
-  * (A5), multi-statement split (ClientMultiStatements), structured errors
-  * (A14), incremental result delivery.
+  * Statements relay through [[Engine.Session.batch]], the same entry the
+  * wire server's COM_QUERY uses, like the gateway relays client traffic
+  * (/root/reference/gateway/relay.go:47-99): routing (A5), MySQL dialect,
+  * multi-statement split (ClientMultiStatements), structured errors (A14).
   */
 object Sql {
   def main(args: Array[String]): Unit = {
@@ -21,7 +21,7 @@ object Sql {
     val spark = Engine.build(s"local[$cpus]", cpus.toInt)
     try {
       val session = Engine.connect(spark, "default", Map("default" -> dir))
-      session.sqlBatch(batch).zipWithIndex.foreach { case (df, i) =>
+      session.batch(batch).zipWithIndex.foreach { case (df, i) =>
         if (i > 0) println()
         df.show(100, truncate = false)
       }

@@ -39,7 +39,10 @@ import graft.Engine
   * Scale/behavior notes:
   *  - thread-per-connection over a shared SparkSession — the engine analog
   *    of the reference's goroutine-per-connection accept loop;
-  *  - result rows stream packet-by-packet from `toLocalIterator` (the
+  *  - the server only frames bytes: every statement enters through the
+  *    same [[graft.Engine.Session]] API in-process callers use (dialect
+  *    translation, batch splitting and status bits live there), and result
+  *    rows stream packet-by-packet from [[graft.Engine.drain]] (the
   *    partition-at-a-time incremental relay of SURVEY §2A A10) — the server
   *    never holds a full result set;
   *  - like the reference relay, the handshake's thread id is the FRONT-END's
@@ -668,10 +671,20 @@ final class MySqlServer private (listener: ServerSocket,
   private def eofPayload(status: Int): Array[Byte] =
     new Payload().int1(0xFE).int2(0).int2(status).result()
 
-  private def errPayload(e: Engine.EngineError): Array[Byte] =
-    new Payload().int1(0xFF).int2(e.code).int1('#')
-      .bytes(e.sqlState.getBytes(UTF_8))
-      .bytes(e.message.take(500).getBytes(UTF_8)).result()
+  /** The ERR packet for any failure a command raises: an
+    * [[Engine.EngineError]] carries its own code and SQLSTATE, anything
+    * else is the gateway's single-ERR wrap (code 1105, SQLSTATE 08S01,
+    * gateway.go:242-251) around its message. */
+  private def errPayload(e: Exception): Array[Byte] = {
+    val ee = e match {
+      case ee: Engine.EngineError => ee
+      case _ => Engine.EngineError(1105, "08S01",
+        Option(e.getMessage).getOrElse(e.getClass.getName))
+    }
+    new Payload().int1(0xFF).int2(ee.code).int1('#')
+      .bytes(ee.sqlState.getBytes(UTF_8))
+      .bytes(ee.message.take(500).getBytes(UTF_8)).result()
+  }
 
   private def handshakePayload(threadId: Long): Array[Byte] =
     new Payload()
@@ -851,6 +864,27 @@ final class MySqlServer private (listener: ServerSocket,
     * cleanup still closes whichever session is current. */
   private final class SessionRef(var s: Engine.Session)
 
+  /** Authenticate and route one client — the handshake and COM_CHANGE_USER
+    * both log in here. Authentication is OPTIONAL (A8): by default any
+    * credential is accepted, the reference's delegate-to-backend stance
+    * (gateway/gateway.go:226-240); a server started with a password store
+    * verifies the mysql_native_password scramble against the greeting's
+    * salt, and a mismatch or unknown user is the real server's 1045/28000
+    * before any session exists. Routing is [[Engine.login]]'s
+    * `{cluster}.{user}` split. */
+  private def login(user: String, auth: Array[Byte], db: Option[String],
+      attrs: Map[String, String]): Engine.Session = {
+    passwords.foreach { store =>
+      val ok = store.get(user).exists { pw =>
+        if (pw.isEmpty) auth.isEmpty
+        else java.security.MessageDigest.isEqual(auth, nativeScramble(pw, salt))
+      }
+      if (!ok) throw Engine.EngineError(1045, "28000",
+        s"Access denied for user '${user.take(64)}'")
+    }
+    Engine.login(spark, user, backends, db, databases, attrs)
+  }
+
   private def serve(sock0: Socket, threadId: Long): Unit = {
     sock0.setTcpNoDelay(true)
     // per-connection read deadline (mysql/conn.go:151-152): every blocking
@@ -915,15 +949,10 @@ final class MySqlServer private (listener: ServerSocket,
             rawOut.flush()
             return
         }
-      // OPTIONAL authentication (A8): by default any credential is
-      // accepted — the reference's delegate-to-backend stance
-      // (gateway/gateway.go:226-240) — but a server started with a
-      // password store verifies the mysql_native_password scramble
-      // against the greeting's salt; mismatch/unknown user → the real
-      // server's 1045/28000 before any session exists. A verifying client
-      // whose handshake response named a DIFFERENT plugin (MySQL-8-era
-      // connectors default to caching_sha2_password) is driven back with
-      // an AuthSwitchRequest (0xFE + plugin + nonce) to
+      // OPTIONAL authentication (A8, checked in [[login]]): a verifying
+      // client whose handshake response named a DIFFERENT plugin
+      // (MySQL-8-era connectors default to caching_sha2_password) is
+      // driven back with an AuthSwitchRequest (0xFE + plugin + nonce) to
       // mysql_native_password — the reference's whole A7 trick is exactly
       // this auth-switch forcing (gateway/gateway.go:132-143, the
       // deliberately-invalid plugin at mysql/constants.go:70). The nonce
@@ -941,31 +970,10 @@ final class MySqlServer private (listener: ServerSocket,
         authBytes = sw
         authSeq = swSeq
       }
-      passwords.foreach { store =>
-        val ok = store.get(hello.user).exists { pw =>
-          if (pw.isEmpty) authBytes.isEmpty
-          else java.security.MessageDigest.isEqual(
-            authBytes, nativeScramble(pw, salt))
-        }
-        if (!ok) {
-          writePacket(rawOut, authSeq + 1, errPayload(Engine.EngineError(
-            1045, "28000",
-            s"Access denied for user '${hello.user.take(64)}'")))
-          rawOut.flush()
-          return
-        }
-      }
-      // handshake-username routing: split at the FIRST '.' like the
-      // reference (gateway.go:253-259); bad cluster/db → ERR, close
+      // bad credential, cluster or db → ERR, close
       session =
-        try {
-          val (clusterId, user) = hello.user.split("\\.", 2) match {
-            case Array(c, u) => (c, u)
-            case Array(c) => (c, "")
-          }
-          Engine.connect(spark, clusterId, backends, hello.db, databases,
-            user, hello.attrs)
-        } catch {
+        try login(hello.user, authBytes, hello.db, hello.attrs)
+        catch {
           case e: Engine.EngineError =>
             writePacket(rawOut, authSeq + 1, errPayload(e))
             rawOut.flush()
@@ -1019,31 +1027,16 @@ final class MySqlServer private (listener: ServerSocket,
       comp: Option[(CompressedInput, CompressedOutput)],
       sref: SessionRef, hello: ClientHello): Unit = {
       def session: Engine.Session = sref.s
-      // binary prepared-statement wire state: execute-time schema per
-      // statement (cursor fetches re-use it), last bound parameter types
+      // binary prepared-statement wire state: last bound parameter types
       // (clients may omit types after the first execute), and the set of
       // parameters with pending COM_STMT_SEND_LONG_DATA chunks (their
       // values are ABSENT from the execute packet)
-      val stmtSchemas = scala.collection.mutable.Map.empty[Long, StructType]
       val stmtTypes = scala.collection.mutable.Map.empty[Long, Array[Int]]
       val stmtPending =
         scala.collection.mutable.Map.empty[Long, scala.collection.mutable.Set[Int]]
       def stmtOf(sid: Long): Engine.PreparedStatement =
         session.statement(sid).getOrElse(throw Engine.EngineError(1243, "HY000",
           s"Unknown prepared statement handler ($sid)"))
-
-      /** Session status word with the cursor bits replaced by the named
-        * STATEMENT's cursor state — the fetch/cursor-open responses must
-        * report their own cursor, not the last-opened stream's. */
-      def cursorStatus(sid: Long): Int = {
-        val base = session.statusFlags &
-          ~(Engine.Status.CursorExists | Engine.Status.LastRowSent)
-        session.cursorHasNext(sid) match {
-          case Some(true) => base | Engine.Status.CursorExists
-          case Some(false) => base | Engine.Status.LastRowSent
-          case None => base
-        }
-      }
 
       // COM_SET_OPTION can toggle multi-statement parsing at runtime;
       // seeded from the handshake capability
@@ -1072,10 +1065,11 @@ final class MySqlServer private (listener: ServerSocket,
             // OK/resultset wrapper) — the mysqladmin status shape
             writePacket(out, base, session.statistics.getBytes(UTF_8))
           case ComInitDb =>
-            respond(out, session, base) { session.use(tail, databases); None }
+            answer(out, base) { sr =>
+              session.use(tail, databases)
+              writePacket(out, sr.v, okPayload(session.statusFlags))
+            }
           case ComQuery =>
-            // a MULTI_STATEMENTS client's batch streams one result set per
-            // statement (flush-per-result-set, gateway/relay.go:85-99)
             val q = tail
             q match {
               case localInfileRe(path, table, sep) =>
@@ -1156,17 +1150,16 @@ final class MySqlServer private (listener: ServerSocket,
                     // the client's file bytes as command packets
                     // (code-review r12 finding on the read-deadline change)
                     case e: java.io.IOException => throw e
-                    case e: Engine.EngineError =>
-                      writePacket(out, sr.v, errPayload(e))
-                    case e: Exception => writePacket(out, sr.v, errPayload(
-                      Engine.EngineError(1105, "08S01",
-                        Option(e.getMessage).getOrElse(e.getClass.getName))))
+                    case e: Exception => writePacket(out, sr.v, errPayload(e))
                   }
                 }
               case _ =>
-                if (multiStmts && Engine.splitStatements(q).length > 1)
-                  respondMulti(out, session, base, q)
-                else respond(out, session, base) { Some(session.sqlMySql(q)) }
+                // a MULTI_STATEMENTS client's batch answers one result set
+                // per statement; without the capability the text is one
+                // statement, however many semicolons it holds
+                respond(out, base, session,
+                  if (multiStmts) session.batch(q)
+                  else Iterator(q).map(session.sqlMySql))
             }
 
           case ComFieldList =>
@@ -1175,8 +1168,7 @@ final class MySqlServer private (listener: ServerSocket,
             // default-value byte) per matching column, then EOF — the
             // legacy metadata command old ORMs and `mysql` tab-completion
             // still issue
-            val sr = new SeqRef(base)
-            try {
+            answer(out, base) { sr =>
               var j = 1
               while (j < cmd.length && cmd(j) != 0) j += 1
               val tbl = new String(cmd, 1, j - 1, UTF_8)
@@ -1208,45 +1200,31 @@ final class MySqlServer private (listener: ServerSocket,
                     columnDefPayload(f, tbl, fieldList = true))
                 }
               writePacket(out, sr.v, eofPayload(session.statusFlags))
-            } catch {
-              case e: Engine.EngineError =>
-                writePacket(out, sr.v, errPayload(e))
-              case e: Exception => writePacket(out, sr.v, errPayload(
-                Engine.EngineError(1105, "08S01",
-                  Option(e.getMessage).getOrElse(e.getClass.getName))))
             }
 
           case ComProcessInfo =>
             // COM_PROCESS_INFO: the SHOW PROCESSLIST result set by command
             // byte (deprecated but still sent by mysqladmin processlist)
-            respond(out, session, base) {
-              Some(session.sqlMySql("SHOW PROCESSLIST"))
-            }
+            respond(out, base, session, session.batch("SHOW PROCESSLIST"))
 
           case ComProcessKill =>
             // COM_PROCESS_KILL: 4-byte LE connection id — the command-byte
             // spelling of KILL <id> (mysqladmin kill); unknown ids answer
             // MySQL's 1094 like the real server
-            try {
+            answer(out, base) { sr =>
               val r = new BinReader(cmd, 1)
               val cid = r.int4().toLong & 0xFFFFFFFFL
               if (!Engine.processList.exists(_._1 == cid))
                 throw Engine.EngineError(1094, "HY000",
                   s"Unknown thread id: $cid")
               session.sqlMySql(s"KILL $cid")
-              writePacket(out, base, okPayload(session.statusFlags))
-            } catch {
-              case e: Engine.EngineError =>
-                writePacket(out, base, errPayload(e))
-              case e: Exception => writePacket(out, base, errPayload(
-                Engine.EngineError(1105, "08S01",
-                  Option(e.getMessage).getOrElse(e.getClass.getName))))
+              writePacket(out, sr.v, okPayload(session.statusFlags))
             }
 
           case ComSetOption =>
             // COM_SET_OPTION: 2-byte LE option — 0 enables / 1 disables
             // multi-statement parsing; classic servers answer an EOF packet
-            try {
+            answer(out, base) { sr =>
               val r = new BinReader(cmd, 1)
               r.int2() match {
                 case 0 => multiStmts = true
@@ -1254,13 +1232,7 @@ final class MySqlServer private (listener: ServerSocket,
                 case other => throw Engine.EngineError(1047, "08S01",
                   s"Unknown COM_SET_OPTION option: $other")
               }
-              writePacket(out, base, eofPayload(session.statusFlags))
-            } catch {
-              case e: Engine.EngineError =>
-                writePacket(out, base, errPayload(e))
-              case e: Exception => writePacket(out, base, errPayload(
-                Engine.EngineError(1105, "08S01",
-                  Option(e.getMessage).getOrElse(e.getClass.getName))))
+              writePacket(out, sr.v, eofPayload(session.statusFlags))
             }
 
           case ComChangeUser =>
@@ -1273,7 +1245,7 @@ final class MySqlServer private (listener: ServerSocket,
             // cluster) answers ERR and LEAVES the current session intact;
             // success closes the old session and opens a fresh one (all
             // session state, prepared statements included, is gone).
-            try {
+            answer(out, base) { sr =>
               var j = 1
               while (j < cmd.length && cmd(j) != 0) j += 1
               val user = new String(cmd, 1, j - 1, UTF_8)
@@ -1287,45 +1259,23 @@ final class MySqlServer private (listener: ServerSocket,
               while (k < cmd.length && cmd(k) != 0) k += 1
               val db = Option(new String(cmd, j, k - j, UTF_8))
                 .filter(_.nonEmpty)
-              passwords.foreach { store =>
-                val ok = store.get(user).exists { pw =>
-                  if (pw.isEmpty) auth.isEmpty
-                  else java.security.MessageDigest.isEqual(
-                    auth, nativeScramble(pw, salt))
-                }
-                if (!ok) throw Engine.EngineError(1045, "28000",
-                  s"Access denied for user '${user.take(64)}'")
-              }
-              val (clusterId, u) = user.split("\\.", 2) match {
-                case Array(c, x) => (c, x)
-                case Array(c) => (c, "")
-              }
-              val next = Engine.connect(spark, clusterId, backends, db,
-                databases, u, hello.attrs)
+              val next = login(user, auth, db, hello.attrs)
               sref.s.close()
               sref.s = next
-              stmtSchemas.clear(); stmtTypes.clear(); stmtPending.clear()
-              writePacket(out, base, okPayload(session.statusFlags))
-            } catch {
-              case e: Engine.EngineError =>
-                writePacket(out, base, errPayload(e))
-              case e: Exception => writePacket(out, base, errPayload(
-                Engine.EngineError(1105, "08S01",
-                  Option(e.getMessage).getOrElse(e.getClass.getName))))
+              stmtTypes.clear(); stmtPending.clear()
+              writePacket(out, sr.v, okPayload(session.statusFlags))
             }
 
           case ComResetConnection =>
             // COM_RESET_CONNECTION: connection-pool hygiene — clears all
             // session state without re-authenticating
             session.resetConnection()
-            stmtSchemas.clear(); stmtTypes.clear(); stmtPending.clear()
+            stmtTypes.clear(); stmtPending.clear()
             writePacket(out, base, okPayload(session.statusFlags))
 
           case ComStmtPrepare =>
-            val sr = new SeqRef(base)
-            try {
-              // the MySQL-dialect translation COM_QUERY applies (sqlMySql)
-              val ps = session.prepareStatement(Engine.translateMySql(tail))
+            answer(out, base) { sr =>
+              val ps = session.prepareStatement(tail)
               sr.v = writePacket(out, sr.v,
                 prepareOkPayload(ps.statementId, ps.paramCount))
               if (ps.paramCount > 0) {
@@ -1334,17 +1284,10 @@ final class MySqlServer private (listener: ServerSocket,
                 }
                 writePacket(out, sr.v, eofPayload(session.statusFlags))
               }
-            } catch {
-              case e: Engine.EngineError =>
-                writePacket(out, sr.v, errPayload(e))
-              case e: Exception => writePacket(out, sr.v, errPayload(
-                Engine.EngineError(1105, "08S01",
-                  Option(e.getMessage).getOrElse(e.getClass.getName))))
             }
 
           case ComStmtExecute =>
-            val sr = new SeqRef(base)
-            try {
+            answer(out, base) { sr =>
               val r = new BinReader(cmd, 1)
               val sid = r.int4().toLong
               val flags = r.int1()
@@ -1369,35 +1312,29 @@ final class MySqlServer private (listener: ServerSocket,
                   else r.value(types(i))
                 }
               }
+              // the status word is the STATEMENT's: its own cursor bits,
+              // never another statement's
               if ((flags & CursorTypeReadOnly) != 0) {
                 // CURSOR_TYPE_READ_ONLY: run, hold the rows server-side,
                 // answer metadata only — COM_STMT_FETCH pulls the rows
                 ps.executeCursor(args: _*)
-                stmtSchemas(sid) = ps.lastSchema
                 stmtPending.remove(sid)
-                writeColumnBlock(out, sr, ps.lastSchema, cursorStatus(sid))
+                writeColumnBlock(out, sr, ps.lastSchema, ps.statusFlags)
               } else {
                 val df = ps.execute(args: _*)
-                stmtSchemas(sid) = df.schema
                 stmtPending.remove(sid)
                 if (df.schema.isEmpty)
-                  writePacket(out, sr.v, okPayload(session.statusFlags))
+                  writePacket(out, sr.v, okPayload(ps.statusFlags))
                 else {
-                  writeColumnBlock(out, sr, df.schema, session.statusFlags)
+                  writeColumnBlock(out, sr, df.schema, ps.statusFlags)
                   out.flush() // metadata first — rows may take a while
-                  val it = df.toLocalIterator()
+                  val it = Engine.drain(df)
                   while (it.hasNext)
                     sr.v = writePacket(out, sr.v,
                       binaryRowPayload(it.next(), df.schema))
-                  writePacket(out, sr.v, eofPayload(session.statusFlags))
+                  writePacket(out, sr.v, eofPayload(ps.statusFlags))
                 }
               }
-            } catch {
-              case e: Engine.EngineError =>
-                writePacket(out, sr.v, errPayload(e))
-              case e: Exception => writePacket(out, sr.v, errPayload(
-                Engine.EngineError(1105, "08S01",
-                  Option(e.getMessage).getOrElse(e.getClass.getName))))
             }
 
           case ComStmtSendLongData =>
@@ -1417,43 +1354,29 @@ final class MySqlServer private (listener: ServerSocket,
             } catch { case _: Exception => () }
 
           case ComStmtFetch =>
-            val sr = new SeqRef(base)
-            try {
+            // truncated/garbage fetch payloads decode-fail outside
+            // EngineError — answered ERR like COM_STMT_EXECUTE instead of
+            // killing the connection (ADVICE r09)
+            answer(out, base) { sr =>
               val r = new BinReader(cmd, 1)
               val sid = r.int4().toLong
               val count = r.int4()
-              val schema = stmtSchemas.getOrElse(sid,
-                throw Engine.EngineError(1105, "08S01",
-                  s"no open cursor for statement $sid"))
               val rows = session.fetch(sid, count)
+              val ps = stmtOf(sid)
               rows.foreach { row =>
-                sr.v = writePacket(out, sr.v, binaryRowPayload(row, schema))
+                sr.v = writePacket(out, sr.v,
+                  binaryRowPayload(row, ps.lastSchema))
               }
-              writePacket(out, sr.v, eofPayload(cursorStatus(sid)))
-            } catch {
-              case e: Engine.EngineError =>
-                writePacket(out, sr.v, errPayload(e))
-              // truncated/garbage fetch payloads decode-fail outside
-              // EngineError — answer ERR like COM_STMT_EXECUTE does
-              // instead of killing the connection (ADVICE r09)
-              case e: Exception => writePacket(out, sr.v, errPayload(
-                Engine.EngineError(1105, "08S01",
-                  Option(e.getMessage).getOrElse(e.getClass.getName))))
+              writePacket(out, sr.v, eofPayload(ps.statusFlags))
             }
 
           case ComStmtReset =>
-            try {
+            answer(out, base) { sr =>
               val r = new BinReader(cmd, 1)
               val sid = r.int4().toLong
               stmtOf(sid).reset()
               stmtPending.remove(sid)
-              writePacket(out, base, okPayload(session.statusFlags))
-            } catch {
-              case e: Engine.EngineError =>
-                writePacket(out, base, errPayload(e))
-              case e: Exception => writePacket(out, base, errPayload(
-                Engine.EngineError(1105, "08S01",
-                  Option(e.getMessage).getOrElse(e.getClass.getName))))
+              writePacket(out, sr.v, okPayload(session.statusFlags))
             }
 
           case ComStmtClose =>
@@ -1463,8 +1386,7 @@ final class MySqlServer private (listener: ServerSocket,
               val r = new BinReader(cmd, 1)
               val sid = r.int4().toLong
               session.statement(sid).foreach(_.close())
-              stmtSchemas.remove(sid); stmtTypes.remove(sid)
-              stmtPending.remove(sid)
+              stmtTypes.remove(sid); stmtPending.remove(sid)
             } catch { case _: Exception => () }
 
           case other =>
@@ -1486,33 +1408,43 @@ final class MySqlServer private (listener: ServerSocket,
       }
   }
 
-  /** Run one command body; map its outcome onto the wire: None → OK, a
-    * zero-column frame (the engine's session-state marker) → OK, a real
-    * frame → the EOF-delimited lenenc text result set streamed row by row;
-    * EngineError → its ERR packet, anything else → the 1105 wrap (the
-    * gateway's single-ERR failure contract, gateway.go:242-251). */
-  private def respond(out: OutputStream, session: Engine.Session, base: Int)(
-      body: => Option[org.apache.spark.sql.DataFrame]): Unit = {
+  /** Run one command's response body from sequence id `base`. Whatever it
+    * raises answers ERR ([[errPayload]]) at the CURRENT sequence id — an
+    * execution-time failure after metadata packets already went out must
+    * not restart the sequence (a stale id is a packets-out-of-order kill
+    * on real clients). */
+  private def answer(out: OutputStream, base: Int)(body: SeqRef => Unit): Unit = {
     val sr = new SeqRef(base)
-    try body match {
-      case None => writePacket(out, sr.v, okPayload(session.statusFlags))
-      case Some(df) if df.schema.isEmpty =>
-        writePacket(out, sr.v, okPayload(session.statusFlags))
-      case Some(df) => writeTextResultSet(out, sr, df, session.statusFlags)
-    } catch {
-      // ERR at the CURRENT sequence id — an execution-time failure after
-      // metadata packets already went out must not restart the sequence
-      case e: Engine.EngineError => writePacket(out, sr.v, errPayload(e))
-      case e: Exception =>
-        writePacket(out, sr.v, errPayload(Engine.EngineError(1105, "08S01",
-          Option(e.getMessage).getOrElse(e.getClass.getName))))
-    }
+    try body(sr)
+    catch { case e: Exception => writePacket(out, sr.v, errPayload(e)) }
   }
 
+  /** Answer a COM_QUERY's statements — one, or a CLIENT_MULTI_STATEMENTS
+    * batch from [[Engine.Session.batch]], which runs each statement only
+    * when this loop reaches it. A zero-column frame (the engine's
+    * session-state marker) answers OK, a real frame the EOF-delimited
+    * lenenc text result set streamed row by row. Each answer flushes
+    * before the next statement RUNS — the flush-per-result-set outbound
+    * relay of gateway/relay.go:85-99 — and every terminator except the
+    * last carries SERVER_MORE_RESULTS_EXISTS. An error answers ERR and
+    * ends the batch (MySQL semantics: remaining statements never
+    * execute); sequence ids continue across the whole response. */
+  private def respond(out: OutputStream, base: Int, session: Engine.Session,
+      results: Iterator[org.apache.spark.sql.DataFrame]): Unit =
+    answer(out, base) { sr =>
+      while (results.hasNext) {
+        val df = results.next()
+        val status = session.statusFlags |
+          (if (results.hasNext) Engine.Status.MoreResultsExists else 0)
+        if (df.schema.isEmpty) sr.v = writePacket(out, sr.v, okPayload(status))
+        else writeTextResultSet(out, sr, df, status)
+        out.flush()
+      }
+    }
+
   /** One EOF-delimited lenenc text result set streamed row by row; `status`
-    * rides both EOFs (the multi-result path ORs in MORE_RESULTS_EXISTS).
-    * Advances the caller's sequence cursor as it writes, so a mid-stream
-    * failure's ERR lands at the right id. */
+    * rides both EOFs. Advances the caller's sequence cursor as it writes,
+    * so a mid-stream failure's ERR lands at the right id. */
   private def writeTextResultSet(out: OutputStream, sr: SeqRef,
       df: org.apache.spark.sql.DataFrame, status: Int): Unit = {
     sr.v = writePacket(out, sr.v,
@@ -1522,40 +1454,8 @@ final class MySqlServer private (listener: ServerSocket,
     }
     sr.v = writePacket(out, sr.v, eofPayload(status))
     out.flush() // metadata first — rows may take a while
-    val it = df.toLocalIterator()
+    val it = Engine.drain(df)
     while (it.hasNext) sr.v = writePacket(out, sr.v, rowPayload(it.next()))
     sr.v = writePacket(out, sr.v, eofPayload(status))
-  }
-
-  /** CLIENT_MULTI_STATEMENTS COM_QUERY: each statement's result set (or OK)
-    * flushes to the client before the next statement RUNS — the flush-per-
-    * result-set outbound relay of gateway/relay.go:85-99 — with
-    * SERVER_MORE_RESULTS_EXISTS on every terminator except the last. An
-    * error ends the batch (MySQL semantics: remaining statements never
-    * execute); sequence ids continue across the whole response. */
-  private def respondMulti(out: OutputStream, session: Engine.Session,
-      base: Int, batch: String): Unit = {
-    val stmts = Engine.splitStatements(Engine.translateMySql(batch))
-    val sr = new SeqRef(base)
-    var i = 0
-    while (i < stmts.length) {
-      val more =
-        if (i < stmts.length - 1) Engine.Status.MoreResultsExists else 0
-      try {
-        val df = session.sql(stmts(i))
-        if (df.schema.isEmpty)
-          sr.v = writePacket(out, sr.v, okPayload(session.statusFlags | more))
-        else writeTextResultSet(out, sr, df, session.statusFlags | more)
-      } catch {
-        case e: Engine.EngineError =>
-          writePacket(out, sr.v, errPayload(e)); return
-        case e: Exception =>
-          writePacket(out, sr.v, errPayload(Engine.EngineError(1105, "08S01",
-            Option(e.getMessage).getOrElse(e.getClass.getName))))
-          return
-      }
-      out.flush()
-      i += 1
-    }
   }
 }

@@ -70,9 +70,10 @@ class EngineSpec extends SparkSpec {
     intercept[Exception] { b.sql("SELECT * FROM scratch").collect() }
   }
 
-  test("stream delivers rows incrementally without driver materialization") {
+  test("the row drain delivers rows incrementally without driver materialization") {
     val s = Engine.connect(spark, "prod", backends)
-    val it = s.stream("SELECT n_nationkey FROM nation ORDER BY n_nationkey")
+    val it = Engine.drain(
+      s.sql("SELECT n_nationkey FROM nation ORDER BY n_nationkey"))
     assert(it.take(3).map(_.getInt(0)).toSeq == Seq(0, 1, 2))
     assert(it.hasNext) // remaining rows still pending, not collected
   }
@@ -783,7 +784,7 @@ class EngineSpec extends SparkSpec {
         |INSERT INTO `t_dump` VALUES (1,'alice',10.50,'first, (note)','a','2024-01-02 03:04:05',NULL,7,18446744073709551615),(2,'bob\'s',NULL,'it\'s',NULL,NULL,NULL,NULL,NULL);
         |/*!40000 ALTER TABLE `t_dump` ENABLE KEYS */;
         |UNLOCK TABLES;""".stripMargin
-    s.sqlBatch(dump)
+    s.batch(dump).foreach(_ => ())
     // the restored table is a first-class session relation
     assert(s.sql("SHOW TABLES LIKE 't_dump'").count() == 1)
     // JDBC metadata escapes wildcards: \_ must match a LITERAL underscore
@@ -1052,9 +1053,9 @@ class EngineSpec extends SparkSpec {
     assert(s.spark.conf.get("spark.sql.shuffle.partitions") == "7")
     s.sql("SET spark.sql.shuffle.partitions=4")
     // a handshake-style batch accumulates state through the session
-    val out = s.sqlBatch(
+    val out = s.batch(
       "SET NAMES utf8; SET autocommit=1; SELECT @@character_set_client AS c")
-    assert(out.last.head().getString(0) == "utf8")
+    assert(out.toList.last.head().getString(0) == "utf8")
   }
 
   test("ping reports backend liveness (COM_PING analog)") {
@@ -1178,18 +1179,21 @@ class EngineSpec extends SparkSpec {
     intercept[Engine.EngineError] { s.sql("EXECUTE pc USING @x, @x") }
   }
 
-  test("streamBatch delivers per-statement result sets lazily and in order") {
+  test("batch runs per-statement result sets lazily and in order") {
     val s = Engine.connect(spark, "prod", backends)
-    val it = s.streamBatch(
+    val it = s.batch(
       "SET NAMES utf8; SELECT @@character_set_client AS c; SELECT bogus syntax")
-    // statement boundaries: each element is (index, row iterator)
-    val (i0, r0) = it.next()
-    assert(i0 == 0 && r0.isEmpty) // SET produces an empty OK result
-    val (i1, r1) = it.next()
+    // one frame per statement; SET produces the empty OK-shaped frame
+    assert(it.next().schema.isEmpty)
     // in-order execution: the second statement observes the first's state
-    assert(i1 == 1 && r1.next().getString(0) == "utf8")
-    // lazy: the malformed third statement only fails when reached
+    assert(Engine.drain(it.next()).next().getString(0) == "utf8")
+    // lazy: hasNext runs nothing; the malformed third statement only
+    // fails when reached
+    assert(it.hasNext)
     intercept[Engine.EngineError] { it.next() }
+    assert(!it.hasNext)
+    // a text holding one statement runs as given, trailing ';' included
+    assert(s.batch("SELECT 7 AS x;").map(_.head().getInt(0)).toList == List(7))
     s.close()
   }
 
@@ -1205,20 +1209,27 @@ class EngineSpec extends SparkSpec {
     s.sql("SET autocommit = OFF")
     assert((s.statusFlags & Autocommit) == 0)
     s.sql("SET autocommit = ON")
-    // cursor bits follow the last stream(): EXISTS while rows remain,
-    // LAST_ROW_SENT once drained
-    val it = s.stream("SELECT n_nationkey FROM nation")
-    assert((s.statusFlags & CursorExists) != 0)
-    assert((s.statusFlags & LastRowSent) == 0)
-    while (it.hasNext) it.next()
-    assert((s.statusFlags & LastRowSent) != 0)
-    assert((s.statusFlags & CursorExists) == 0)
-    // MORE_RESULTS_EXISTS is up exactly between streamBatch result sets
-    val b = s.streamBatch("SELECT 1 AS a; SELECT 2 AS b")
+    // cursor bits belong to the statement's own word: EXISTS while its
+    // held rows remain, LAST_ROW_SENT once drained — never the session's
+    val ps = s.prepareStatement("SELECT n_nationkey FROM nation")
+    ps.executeCursor()
+    assert((ps.statusFlags & CursorExists) != 0)
+    assert((ps.statusFlags & LastRowSent) == 0)
+    assert((s.statusFlags & (CursorExists | LastRowSent)) == 0)
+    while (s.fetch(ps.statementId, 10).nonEmpty) ()
+    assert((ps.statusFlags & LastRowSent) != 0)
+    assert((ps.statusFlags & CursorExists) == 0)
+    assert((s.statusFlags & (CursorExists | LastRowSent)) == 0)
+    assert((ps.statusFlags & Autocommit) != 0) // session bits ride along
+    ps.close()
+    assert((ps.statusFlags & (CursorExists | LastRowSent)) == 0)
+    // MORE_RESULTS_EXISTS is the batch walker's: hasNext is up exactly
+    // between result sets, and the session word never carries it
+    val b = s.batch("SELECT 1 AS a; SELECT 2 AS b")
     b.next()
-    assert((s.statusFlags & MoreResultsExists) != 0)
+    assert(b.hasNext && (s.statusFlags & MoreResultsExists) == 0)
     b.next()
-    assert((s.statusFlags & MoreResultsExists) == 0)
+    assert(!b.hasNext)
     // PS_OUT_PARAMS is mapped but never originated (no stored procedures)
     assert(PsOutParams == 0x1000 && (s.statusFlags & PsOutParams) == 0)
     s.close()
@@ -1299,7 +1310,7 @@ class EngineSpec extends SparkSpec {
     // typed-row iterator per execute: rows stream, types survive
     val ps2 = s.prepareStatement(
       "SELECT o_orderkey FROM orders WHERE o_totalprice > ? ORDER BY o_orderkey")
-    val it = ps2.executeRows(100000.0)
+    val it = Engine.drain(ps2.execute(100000.0))
     assert(it.next().get(0).isInstanceOf[Number])
     // '?' inside strings/comments is data, not a parameter
     assert(Engine.countParams("SELECT 'a?b', ? -- not this ?\n, ?") == 2)
@@ -1433,19 +1444,19 @@ class EngineSpec extends SparkSpec {
     intercept[Engine.EngineError] { s.fetch(ps.statementId, 5) }
     // CURSOR_TYPE_READ_ONLY execute: result held server-side, nothing sent
     ps.executeCursor(25)
-    assert((s.statusFlags & CursorExists) != 0)
-    assert((s.statusFlags & LastRowSent) == 0)
+    assert((ps.statusFlags & CursorExists) != 0)
+    assert((ps.statusFlags & LastRowSent) == 0)
     // 3-batch walk to exhaustion: 10 + 10 + 5, bits transition per batch
     val b1 = s.fetch(ps.statementId, 10)
     assert(b1.map(_.getInt(0)) == (0 until 10))
-    assert((s.statusFlags & CursorExists) != 0)
+    assert((ps.statusFlags & CursorExists) != 0)
     val b2 = s.fetch(ps.statementId, 10)
     assert(b2.map(_.getInt(0)) == (10 until 20))
-    assert((s.statusFlags & CursorExists) != 0)
+    assert((ps.statusFlags & CursorExists) != 0)
     val b3 = s.fetch(ps.statementId, 10)
     assert(b3.map(_.getInt(0)) == (20 until 25)) // final partial batch
-    assert((s.statusFlags & LastRowSent) != 0)
-    assert((s.statusFlags & CursorExists) == 0)
+    assert((ps.statusFlags & LastRowSent) != 0)
+    assert((ps.statusFlags & CursorExists) == 0)
     // fetching past the end yields an empty batch, not an error (the
     // LAST_ROW_SENT state is sticky until the next execute)
     assert(s.fetch(ps.statementId, 10).isEmpty)
@@ -1608,7 +1619,8 @@ class EngineSpec extends SparkSpec {
     s.sql("COMMIT")
     assert(!s.inTransaction)
     // the batch a transactional client actually sends
-    s.sqlBatch("START TRANSACTION READ ONLY; SELECT 1 AS x; ROLLBACK")
+    s.batch("START TRANSACTION READ ONLY; SELECT 1 AS x; ROLLBACK")
+      .foreach(_ => ())
     assert(!s.inTransaction)
     // 'begin' as data never trips it
     s.sql("SELECT 'BEGIN' AS w")
@@ -1645,15 +1657,16 @@ class EngineSpec extends SparkSpec {
     assert(a.sql("SELECT 1 AS user").head().getInt(0) == 1)
   }
 
-  test("prepared statement binds named parameters per execution") {
+  test("prepared statement rebinds parameters per execution") {
     val s = Engine.connect(spark, "prod", backends)
-    val stmt = s.prepare(
-      "SELECT n_name FROM nation WHERE n_nationkey = :k ORDER BY n_name")
-    val first = stmt(Map("k" -> 0)).collect().map(_.getString(0)).toSeq
-    val second = stmt(Map("k" -> 3)).collect().map(_.getString(0)).toSeq
+    val stmt = s.prepareStatement(
+      "SELECT n_name FROM nation WHERE n_nationkey = ? ORDER BY n_name")
+    val first = stmt.execute(0).collect().map(_.getString(0)).toSeq
+    val second = stmt.execute(3).collect().map(_.getString(0)).toSeq
     assert(first.size == 1 && second.size == 1 && first != second)
     // literals bind too (scalar expression, no table)
-    assert(s.prepare("SELECT :x + 1 AS y")(Map("x" -> 41)).head().getInt(0) == 42)
+    assert(s.prepareStatement("SELECT ? + 1 AS y").execute(41)
+      .head().getInt(0) == 42)
   }
 
   test("long_query_time governs the Slow_queries status counter") {

@@ -905,6 +905,13 @@ class MySqlServerSpec extends SparkSpec {
       assert(text._2 == Seq(Seq(Some("1")), Seq(Some("2"))), text)
       assert(binaryLeg(c, stmt) == text)
       c.close()
+      // the in-process prepared statement speaks the same dialect
+      val s = Engine.connect(spark, "prod", backends)
+      try {
+        val rows = s.prepareStatement(stmt).execute().collect()
+          .map(r => Seq(Some(r.get(0).toString))).toSeq
+        assert(rows == text._2, rows)
+      } finally s.close()
     } finally srv.close()
   }
 
@@ -1161,6 +1168,66 @@ class MySqlServerSpec extends SparkSpec {
         s"drained cursor A must report LAST_ROW_SENT (status $stDrained)")
       // B is untouched and still fetches its rows
       assert((fetch(sb, 2) & 0x40) != 0, "cursor B still live")
+      c.close()
+    } finally srv.close()
+  }
+
+  test("cursor status bits ride only their own statement's EXECUTE/FETCH " +
+      "responses, never another command's") {
+    // MySQL clears the per-command status bits at the start of every
+    // command (SERVER_STATUS_CLEAR_SET): an open cursor on statement A
+    // must not show CURSOR_EXISTS on B's plain execute or a text query,
+    // and A's drained cursor must not leave LAST_ROW_SENT on a later PING
+    val srv = MySqlServer.start(spark, backends, databases)
+    try {
+      val c = login(srv.port)
+      val (sa, _) = stmtPrepare(c, "SELECT n_nationkey FROM nation " +
+        "WHERE n_nationkey < ? ORDER BY n_nationkey")
+      val (sb, _) = stmtPrepare(c, "SELECT CAST(1 AS BIGINT) AS v")
+      val (_, typesA, _, stA) = stmtExecute(c, sa,
+        Seq(BParam(0x08, Some(le8(3L)))), cursor = true)
+      assert((stA & 0x40) != 0, "A's own cursor-open EOF carries CURSOR_EXISTS")
+      def fetchA(k: Int): Int = {
+        val b = new ByteArrayOutputStream()
+        b.write(0x1C)
+        (0 until 4).foreach(j => b.write(((sa >>> (8 * j)) & 0xFF).toInt))
+        Array(k, 0, 0, 0).foreach(b.write)
+        c.writePacket(0, b.toByteArray)
+        drainBinaryRows(c, typesA)._2
+      }
+      assert((fetchA(1) & 0x40) != 0, "A still has rows")
+      // B's plain execute: neither the column-block EOF nor the final EOF
+      // may carry A's cursor bits
+      val b = new ByteArrayOutputStream()
+      b.write(0x17)
+      (0 until 4).foreach(j => b.write(((sb >>> (8 * j)) & 0xFF).toInt))
+      b.write(0x00)
+      Array(1, 0, 0, 0).foreach(b.write)
+      c.writePacket(0, b.toByteArray)
+      assert(new Reader(c.readPacket()._2).lenencInt() == 1)
+      c.readPacket() // the column definition
+      def eofStatus(p: Array[Byte]): Int = {
+        assert((p(0) & 0xFF) == 0xFE && p.length < 9)
+        val r = new Reader(p); r.int1(); r.int2(); r.int2()
+      }
+      val colEof = eofStatus(c.readPacket()._2)
+      c.readPacket() // the one row
+      val rowsEof = eofStatus(c.readPacket()._2)
+      assert((colEof & 0xC0) == 0, f"column-block EOF status 0x$colEof%02x")
+      assert((rowsEof & 0xC0) == 0, f"final EOF status 0x$rowsEof%02x")
+      // a text query's EOFs are clean too
+      c.writePacket(0, Array[Byte](0x03) ++ "SELECT 1 AS x".getBytes(UTF_8))
+      val (_, _, textStatus) = readTextSet(c, c.readPacket()._2)
+      assert((textStatus & 0xC0) == 0, f"text EOF status 0x$textStatus%02x")
+      // drain A (its own FETCH reports LAST_ROW_SENT), close it: PING's
+      // OK must not inherit the bit
+      assert((fetchA(10) & 0x80) != 0)
+      c.writePacket(0, Array[Byte](0x19) ++
+        (0 until 4).map(j => ((sa >>> (8 * j)) & 0xFF).toByte))
+      val ping = simpleCommand(c, 0x0E)
+      val pr = new Reader(ping); pr.int1(); pr.lenencInt(); pr.lenencInt()
+      val pingStatus = pr.int2()
+      assert(pingStatus == 0x02, f"PING OK status 0x$pingStatus%02x")
       c.close()
     } finally srv.close()
   }
